@@ -160,12 +160,9 @@ def apply_batch(
     # beside the state publish. log_run still lands strictly AFTER the
     # state write (the audit marker must never precede the state it
     # records), so the at-least-once crash-window analysis is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
+    from ..functions.concurrent import overlap
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        f_n = pool.submit(
-            lambda: partial.agg(F.sum(cfg.count_col)).first()[0]
-        )
+    def publish() -> None:
         if version > 0:
             prev_table = state_table(table, version - 1)
             if not W.table_exists(spark, prev_table, database=database):
@@ -191,7 +188,8 @@ def apply_batch(
         # v{version}, which the plan never reads (it reads the immutable
         # v{version-1})
         W.write_table(merged, state_table(table, version), database=database)
-        n = f_n.result()
+
+    _, n = overlap(publish, lambda: partial.agg(F.sum(cfg.count_col)).first()[0])
     log_run(
         spark,
         RunLogEntry(batch_id, table, int(n or 0), "success", ts, ts),

@@ -57,14 +57,14 @@ def train_codebooks(
     via ``clustering._FIT_CACHE`` — the ``m`` training-job groups run
     once per session instead of once per query invocation.
 
-    The ``m`` fits are INDEPENDENT, so they are submitted as concurrent
-    Spark jobs from a thread pool: each fit is a chain of tiny
+    The ``m`` fits are INDEPENDENT, so they run as concurrent Spark jobs
+    through ``overlap``: each fit is a chain of tiny
     jobs (seed scan + ``n_iter`` aggregate-collects) whose wall time is
     dominated by fixed per-job scheduling cost, and Spark's scheduler
     interleaves concurrent jobs across the executor cores — wall time is
     ~max(fit) instead of sum(fit). Determinism is untouched: each
     subspace trains on its own slice and lands in its own list slot."""
-    from concurrent.futures import ThreadPoolExecutor
+    from ..functions.concurrent import overlap
 
     def fit(s: int) -> Centroids:
         sub_df = prep.select(
@@ -83,8 +83,7 @@ def train_codebooks(
             train_mod=train_mod,
         )
 
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        return list(pool.map(fit, range(m)))
+    return overlap(*(lambda s=s: fit(s) for s in range(m)))
 
 
 def _bt(name: str) -> str:

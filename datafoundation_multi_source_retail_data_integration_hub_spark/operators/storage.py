@@ -30,10 +30,10 @@ def persist_tracked(df: DataFrame) -> DataFrame:
 
 def on_release(hook: Callable[[], None]) -> None:
     """Register a callback run by every ``unpersist_all`` — for memos of
-    persisted frames (sources.tables._SPREAD_MEMO) that must be dropped
-    when the registry releases the frames they point at, or a later
-    lookup would hand out an unpersisted frame and silently lose the
-    optimizer-barrier/single-scan properties the cache provides."""
+    what is persisted (sources.tables._SPREAD_MEMO) that must be dropped
+    when the registry releases the frames, or a later lookup would skip
+    the persist and silently lose the optimizer-barrier/single-scan
+    properties the cache provides."""
     _RELEASE_HOOKS.append(hook)
 
 

@@ -151,7 +151,7 @@ def logged_stream_sink(
     """
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
+        from ..functions.concurrent import overlap
 
         spark = batch.sparkSession
         # §2.6: the audit row count is a read-only action over the same
@@ -159,10 +159,7 @@ def logged_stream_sink(
         # two jobs instead of chaining their scheduling floors. The
         # count must still come from the BATCH (logged_write semantics),
         # not from the sink's output.
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_n = pool.submit(batch.count)
-            inner(batch, batch_id)
-            n = f_n.result()
+        _, n = overlap(lambda: inner(batch, batch_id), batch.count)
         run_id = f"{stream_id}#{batch_id}"
         if run_already_logged(spark, run_id, table, database):
             return

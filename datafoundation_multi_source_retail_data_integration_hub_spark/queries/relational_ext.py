@@ -321,22 +321,22 @@ def purchase_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every node has in- and out-edges by construction (the graph is
     symmetric), so there is no dangling mass.
 
-    Materialized under a scoped low shuffle-partition count: every
+    Planned in a child session with a low shuffle-partition count: every
     exchange here carries node- or edge-sized data, and 3 iterations x
     32 near-empty partitions is pure task-launch overhead at bench scale
     (measured 8.0 -> 6.2 s at sf0.1). The count is DERIVED from the
     input bytes (floor 4 = the measured local optimum, +1 per 64 MB of
     lineitem+orders): the r14 sf10 sweep OOM'd the edge-build sort with
-    the old constant 4 at 60M lineitem rows — a fixed scoped count is a
-    scale bug, not a conf."""
-    from ..session import scoped_confs
+    the old constant 4 at 60M lineitem rows — a fixed count is a scale
+    bug, not a conf."""
+    from ..session import child_session
     from ..sources.tables import scaled_shuffle_partitions
 
     n_shuffle = scaled_shuffle_partitions(sf_dir, ("lineitem", "orders"), 4)
-    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}):
-        return _purchase_graph_pagerank(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
+    return _purchase_graph_pagerank(
+        child_session(spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}),
+        sf_dir,
+    )
 
 
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:

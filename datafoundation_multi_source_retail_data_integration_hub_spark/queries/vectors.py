@@ -855,8 +855,7 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same corpus and query set. PQ scores every pair by design
     (the m-bytes-per-vector brute-force regime): its 'candidates' equal
     the full pair count; its win is bytes moved, not pairs skipped."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    from ..functions.concurrent import overlap
     from ..operators.similarity import exact_topk_per_query, ivf_scored, lsh_scored
 
     emb = _emb(spark, sf_dir)
@@ -884,18 +883,15 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Values are counts; ordering cannot change any result (equality
         # with the sequential form is oracle- and A/B-pinned:
         # 3.6 -> 2.2 s at sf0.1).
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            f_n = pool.submit(emb.count)
-            f_nq = pool.submit(queries.count)
-            f_truth = pool.submit(
-                lambda: embedding_topk_bruteforce(spark, sf_dir)
-                .select("query_id", "neighbor_id")
-                .localCheckpoint(eager=True)
-            )
-            f_lsh_c = pool.submit(lsh.count)
-            f_ivf_c = pool.submit(ivf.count)
-            n, nq, truth = f_n.result(), f_nq.result(), f_truth.result()
-            lsh_count, ivf_count = f_lsh_c.result(), f_ivf_c.result()
+        n, nq, truth, lsh_count, ivf_count = overlap(
+            emb.count,
+            queries.count,
+            lambda: embedding_topk_bruteforce(spark, sf_dir)
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True),
+            lsh.count,
+            ivf.count,
+        )
         full_pairs = nq * (n - 1)
 
         def hits(topk: DataFrame) -> int:
@@ -905,17 +901,17 @@ def ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .count()
             )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_n_truth = pool.submit(truth.count)
-            f_h_lsh = pool.submit(lambda: hits(exact_topk_per_query(lsh, TOP_K)))
-            f_h_ivf = pool.submit(lambda: hits(exact_topk_per_query(ivf, TOP_K)))
-            f_h_pq = pool.submit(lambda: hits(embedding_ann_pq(spark, sf_dir)))
-            n_truth = f_n_truth.result()
-            rows = [
-                ("lsh", f_h_lsh.result(), lsh_count),
-                ("ivf", f_h_ivf.result(), ivf_count),
-                ("pq", f_h_pq.result(), full_pairs),
-            ]
+        n_truth, h_lsh, h_ivf, h_pq = overlap(
+            truth.count,
+            lambda: hits(exact_topk_per_query(lsh, TOP_K)),
+            lambda: hits(exact_topk_per_query(ivf, TOP_K)),
+            lambda: hits(embedding_ann_pq(spark, sf_dir)),
+        )
+        rows = [
+            ("lsh", h_lsh, lsh_count),
+            ("ivf", h_ivf, ivf_count),
+            ("pq", h_pq, full_pairs),
+        ]
     finally:
         lsh.unpersist()
         ivf.unpersist()

@@ -11,12 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.concurrent import overlap
 from ..functions.dates import build_calendar, date_key
 from ..functions.local import local_frame
 from ..functions.parity import fixed_sum, round_dp, sql_round_dp, sql_stable_sum
 from ..operators.scd2 import SCD2Config, current_key_map, scd2_initial_load, scd2_merge
 from ..pipelines import retail
 from ..plans.star_schema import StarSchema
+from ..session import child_session
 from ..sources.tables import load_tables
 
 # Deterministic load dates (the reference uses datetime.today(); tests pin
@@ -396,17 +398,11 @@ def _scd2_partition_merge(spark: SparkSession, sf_dir: str, db: str) -> DataFram
     # — run them concurrently instead of chaining two job floors. The
     # checkpoint must still happen HERE (the caller drops the database),
     # so the lit columns land lazily on the checkpointed rows.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    replay_ok, checkpointed = overlap(
         # multiset equality in ONE job: both directed differences empty
-        f_ok = pool.submit(
-            lambda: after.exceptAll(before)
-            .union(before.exceptAll(after))
-            .isEmpty()
-        )
-        f_after = pool.submit(lambda: after.localCheckpoint(eager=True))
-        replay_ok, checkpointed = f_ok.result(), f_after.result()
+        lambda: after.exceptAll(before).union(before.exceptAll(after)).isEmpty(),
+        lambda: after.localCheckpoint(eager=True),
+    )
     return checkpointed.withColumn(
         "untouched_partition_stable", F.lit(bool(untouched_ok))
     ).withColumn("replay_idempotent", F.lit(bool(replay_ok)))
@@ -420,17 +416,19 @@ def scd2_partition_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     forced replay of the last publish is content-idempotent. The merge
     plan itself is the same set-based ``scd2_merge`` the two-batch query
     uses; the oracle extends that query's SQL with the third (CDC-style,
-    delta-only) batch."""
+    delta-only) batch. Runs in a child session with dynamic partition
+    overwrite; the caller's session keeps its own mode."""
     import uuid
-
-    from ..session import scoped_confs
 
     db = f"scd2_pub_{uuid.uuid4().hex[:12]}"
     try:
-        with scoped_confs(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            return _scd2_partition_merge(spark, sf_dir, db)
+        return _scd2_partition_merge(
+            child_session(
+                spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+            ),
+            sf_dir,
+            db,
+        )
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
@@ -666,7 +664,6 @@ def mart_ivm_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mart_incremental_refresh(spark: SparkSession, sf_dir: str, db: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
     from datetime import datetime
 
     from ..operators import ivm
@@ -697,14 +694,12 @@ def _mart_incremental_refresh(spark: SparkSession, sf_dir: str, db: str) -> Data
         # v1 is ordered after v0), so build it while the base version
         # publishes — the concurrent first actions materialize the
         # shared fact cache under BlockManager block-level locking
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_base = pool.submit(
-                apply, "base", fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0), 0
-            )
-            f_dp = pool.submit(
-                lambda: ivm.state_partials(delta, cfg).localCheckpoint(eager=True)
-            )
-            base_ok, delta_partial = f_base.result(), f_dp.result()
+        base_ok, delta_partial = overlap(
+            lambda: apply(
+                "base", fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0), 0
+            ),
+            lambda: ivm.state_partials(delta, cfg).localCheckpoint(eager=True),
+        )
         delta_ok = apply("delta-1", delta, 1, partial=delta_partial)
         # at-least-once redelivery of the SAME batch: guarded no-op
         replay_skipped = not apply("delta-1", delta, 1)
@@ -847,29 +842,24 @@ def _bucketed_join(spark: SparkSession, sf_dir: str, db: str) -> DataFrame:
     # §2.6: the two bucketed builds read different source tables and
     # write different catalog tables — run them concurrently (the
     # ensure_database inside each write is an idempotent IF NOT EXISTS).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_o = pool.submit(
-            W.write_bucketed_table,
+    overlap(
+        lambda: W.write_bucketed_table(
             orders.repartition(N_BUCKETS, "o_orderkey"),
             "orders_bkt",
             ("o_orderkey",),
             N_BUCKETS,
             sort_cols=("o_orderkey",),
             database=db,
-        )
-        f_l = pool.submit(
-            W.write_bucketed_table,
+        ),
+        lambda: W.write_bucketed_table(
             li.repartition(N_BUCKETS, "l_orderkey"),
             "lineitem_bkt",
             ("l_orderkey",),
             N_BUCKETS,
             sort_cols=("l_orderkey",),
             database=db,
-        )
-        f_o.result()
-        f_l.result()
+        ),
+    )
     o_b = W.read_table(spark, "orders_bkt", db)
     l_b = W.read_table(spark, "lineitem_bkt", db)
     return l_b.hint("merge").join(
@@ -1067,13 +1057,13 @@ def dpp_dim_filtered_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cannot match are dropped MAP-SIDE, before the shuffle. At 100 TB with a
 # dim too large to broadcast, that is the difference between shuffling the
 # whole fact and shuffling the ~20% that survives the filter. Injection
-# requires a shuffle join and a large probe scan, so the demo scopes two
-# confs to reproduce the at-scale plan shape on the toy corpus: broadcast
-# off (a 100 TB dim does not broadcast) and the probe-scan size floor
-# lowered (the sf0.1 fact is far below the 10 GiB default). The rewrite is
-# semantics-free, so the plain filtered-join oracle gates the values; the
-# might_contain predicate itself is plan-asserted in
-# tests/test_warehouse_oracle.py.
+# requires a shuffle join and a large probe scan, so the demo runs in a
+# child session whose confs reproduce the at-scale plan shape on the toy
+# corpus: broadcast off (a 100 TB dim does not broadcast) and the
+# probe-scan size floor lowered (the sf0.1 fact is far below the 10 GiB
+# default). The rewrite is semantics-free, so the plain filtered-join
+# oracle gates the values; the might_contain predicate itself is
+# plan-asserted in tests/test_warehouse_oracle.py.
 # ---------------------------------------------------------------------------
 
 BLOOM_PRIORITY = "1-URGENT"
@@ -1089,9 +1079,9 @@ BLOOM_JOIN_CONFS = {
 
 
 def _bloom_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy join+agg; execute while ``BLOOM_JOIN_CONFS`` is in force for
-    the bloom filter to be injected (Catalyst reads confs at optimization
-    time)."""
+    """Lazy join+agg; the bloom filter is injected when ``spark`` carries
+    ``BLOOM_JOIN_CONFS`` (Catalyst reads the executing session's confs at
+    optimization time)."""
     t = load_tables(spark, sf_dir, "lineitem", "orders")
     li = t["lineitem"].select("l_orderkey", "l_extendedprice", "l_discount")
     urgent = (
@@ -1112,13 +1102,12 @@ def _bloom_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bloom_pruned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-facing wrapper: materialize under the scoped at-scale confs
-    (restored on exit), so the executed plan carries the injected
-    bloom-filter predicate on the lineitem scan."""
-    from ..session import scoped_confs
-
-    with scoped_confs(spark, BLOOM_JOIN_CONFS):
-        return _bloom_fact_join(spark, sf_dir).localCheckpoint(eager=True)
+    """Driver-facing wrapper: the lazy join built in a child session that
+    carries the at-scale confs, so whenever it runs, the executed plan
+    carries the injected bloom-filter predicate on the lineitem scan.
+    The caller's session keeps its own broadcast and injection
+    thresholds."""
+    return _bloom_fact_join(child_session(spark, BLOOM_JOIN_CONFS), sf_dir)
 
 
 BLOOM_PRUNED_FACT_JOIN_ORACLE = f"""
@@ -1296,24 +1285,18 @@ def fact_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # §2.6: both invariant checks read the checkpointed dims (and the
     # fact) independently — overlap their job floors
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stable = pool.submit(
-            lambda: dim2.select("c_custkey", "sk")
-            .exceptAll(dim1.select("c_custkey", "sk"))
-            .count()
-            == 0
-        )
-        f_uncorr = pool.submit(
-            lambda: orders.join(
-                dim2.where("inferred"),
-                F.col("o_custkey") == F.col("c_custkey"),
-                "left_semi",
-            ).count()
-            == 0
-        )
-        stable, uncorrected_with_facts = f_stable.result(), f_uncorr.result()
+    stable, uncorrected_with_facts = overlap(
+        lambda: dim2.select("c_custkey", "sk")
+        .exceptAll(dim1.select("c_custkey", "sk"))
+        .count()
+        == 0,
+        lambda: orders.join(
+            dim2.where("inferred"),
+            F.col("o_custkey") == F.col("c_custkey"),
+            "left_semi",
+        ).count()
+        == 0,
+    )
     return (
         orders.join(dim2, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -1377,20 +1360,15 @@ def federated_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         # §2.6: the partition-bounds probe reads the parquet dim, the
         # staging write fills Derby — independent until read_jdbc needs
         # both
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_w = pool.submit(
-                write_jdbc, dim, url, "stg_customer", properties=_DERBY_DRIVER
-            )
-            f_b = pool.submit(
-                lambda: dim.agg(
-                    F.min("c_custkey").alias("lo"),
-                    F.max("c_custkey").alias("hi"),
-                ).collect()[0]
-            )
-            f_w.result()
-            b = f_b.result()
+        _, b = overlap(
+            lambda: write_jdbc(
+                dim, url, "stg_customer", properties=_DERBY_DRIVER
+            ),
+            lambda: dim.agg(
+                F.min("c_custkey").alias("lo"),
+                F.max("c_custkey").alias("hi"),
+            ).collect()[0],
+        )
         cust = read_jdbc(
             spark,
             url,
@@ -1474,13 +1452,20 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     Booleans gate the operational claims (erasure complete; untouched
     partition files bit-identical); the per-bucket row counts are
     value-gated against the source recomputation. Work-asymmetric
-    (table build + rewrite per invocation)."""
+    (table build + rewrite per invocation).
+
+    The whole build runs in one child session with dynamic partition
+    overwrite: a session caches a table's file listing, so a table
+    rewritten in one session and read in another would be read through
+    the reader's stale listing."""
     import os
     import uuid
 
-    from ..session import scoped_confs
     from ..sources import writers as W
 
+    spark = child_session(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    )
     db = f"gdpr_demo_{uuid.uuid4().hex[:12]}"
     table = "fact_orders_gdpr"
     name = f"{db}.{table}"
@@ -1504,41 +1489,27 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         # §2.6 overlap: the pre-state census, the touched-bucket probe
         # and the catalog location lookup all read the just-written
         # table and share nothing — three job floors become one
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_before = pool.submit(
-                lambda: {
-                    r["bucket"]: r["n"]
-                    for r in stored.groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-            )
-            f_touched = pool.submit(
-                lambda: sorted(
-                    r["bucket"]
-                    for r in keys.select(
-                        (F.col("o_custkey") % ERASE_BUCKETS)
-                        .cast("int")
-                        .alias("bucket")
-                    )
-                    .distinct()
-                    .collect()
+        before, touched, loc = overlap(
+            lambda: {
+                r["bucket"]: r["n"]
+                for r in stored.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            },
+            lambda: sorted(
+                r["bucket"]
+                for r in keys.select(
+                    (F.col("o_custkey") % ERASE_BUCKETS).cast("int").alias("bucket")
                 )
-            )
-            f_loc = pool.submit(
-                lambda: [
-                    r["data_type"]
-                    for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
-                    if r["col_name"].strip() == "Location"
-                ][0].removeprefix("file:")
-            )
-            before, touched, loc = (
-                f_before.result(),
-                f_touched.result(),
-                f_loc.result(),
-            )
+                .distinct()
+                .collect()
+            ),
+            lambda: [
+                r["data_type"]
+                for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect()
+                if r["col_name"].strip() == "Location"
+            ][0].removeprefix("file:"),
+        )
         untouched = sorted(set(before) - set(touched))
 
         def inventory(buckets) -> set:
@@ -1562,10 +1533,7 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*stored.columns)
             .localCheckpoint(eager=True)
         )
-        with scoped_confs(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            remainder.write.insertInto(name, overwrite=True)
+        remainder.write.insertInto(name, overwrite=True)
 
         # dynamic overwrite writes NOTHING for a touched bucket whose
         # rows were ALL erased — the stale partition (and its PII files)
@@ -1585,30 +1553,20 @@ def warehouse_key_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         # §2.6 again: the leftover-keys check, the untouched-files
         # inventory (driver-side walk), and the post-state census all
         # read the post-rewrite state independently
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_left = pool.submit(
-                lambda: after.where(F.col("o_custkey") % ERASE_MOD == 0).count()
-            )
+        leftover, intact, counts = overlap(
+            lambda: after.where(F.col("o_custkey") % ERASE_MOD == 0).count(),
             # vacuously true when every bucket was touched (possible at
             # larger SFs where the request list covers all residues);
             # tests/test_key_erasure.py asserts non-vacuity at the
             # oracle SF
-            f_intact = pool.submit(
-                lambda: inventory(untouched) == inv_before
-            )
-            f_counts = pool.submit(
-                lambda: {
-                    int(r["bucket"]): int(r["rows_after"])
-                    for r in after.groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("rows_after"))
-                    .collect()
-                }
-            )
-            leftover, intact, counts = (
-                f_left.result(),
-                f_intact.result(),
-                f_counts.result(),
-            )
+            lambda: inventory(untouched) == inv_before,
+            lambda: {
+                int(r["bucket"]): int(r["rows_after"])
+                for r in after.groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("rows_after"))
+                .collect()
+            },
+        )
         # emit one row per ORIGINAL bucket: a fully-erased bucket is
         # absent from the table after the drop but the oracle (and the
         # erasure report a user expects) carries it with rows_after=0
@@ -1673,14 +1631,13 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Z-order chains are fully independent — each writes its own
     directory and reads only it — and within a chain the skipping
     reports/band count share nothing but the finished write. Running the
-    two chains (and each chain's reports) from thread pools overlaps
+    two chains (and each chain's reports) through ``overlap`` overlaps
     their job tails instead of paying each job's scheduling floor
     sequentially: interleaved A/B at sf0.1 min-of-4 read 2.39 -> 1.43 s
     with bit-identical output (booleans and an exact count are
     order-independent)."""
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..sources import layout
 
@@ -1709,39 +1666,26 @@ def fact_layout_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             layout.write_range_clustered(
                 li, linear, ("l_partkey",), LAYOUT_N_FILES
             )
-            with ThreadPoolExecutor(max_workers=2) as p:
-                f_lin = p.submit(
-                    layout.file_skipping_report, spark, linear, sec_box
-                )
-                f_lead = p.submit(
-                    layout.file_skipping_report, spark, linear, lead_box
-                )
-                return f_lin.result(), f_lead.result()
+            return overlap(
+                lambda: layout.file_skipping_report(spark, linear, sec_box),
+                lambda: layout.file_skipping_report(spark, linear, lead_box),
+            )
 
         def zorder_chain():
             layout.write_zordered(
                 li, zordered, "l_partkey", "l_suppkey", LAYOUT_N_FILES, domains
             )
             (lo_b, hi_b) = sec_box["l_suppkey"]
-            with ThreadPoolExecutor(max_workers=2) as p:
-                f_z = p.submit(
-                    layout.file_skipping_report, spark, zordered, sec_box
-                )
-                f_band = p.submit(
-                    lambda: spark.read.parquet(zordered)
-                    .where(
-                        (F.col("l_suppkey") >= lo_b)
-                        & (F.col("l_suppkey") <= hi_b)
-                    )
-                    .count()
-                )
-                return f_z.result(), f_band.result()
+            return overlap(
+                lambda: layout.file_skipping_report(spark, zordered, sec_box),
+                lambda: spark.read.parquet(zordered)
+                .where((F.col("l_suppkey") >= lo_b) & (F.col("l_suppkey") <= hi_b))
+                .count(),
+            )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_l = pool.submit(linear_chain)
-            f_zc = pool.submit(zorder_chain)
-            (lin_hit, total), (lead_hit, _) = f_l.result()
-            (z_hit, _), rows_in_band = f_zc.result()
+        ((lin_hit, total), (lead_hit, _)), ((z_hit, _), rows_in_band) = overlap(
+            linear_chain, zorder_chain
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return local_frame(

@@ -12,6 +12,7 @@ root).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,40 +52,50 @@ def _normalize_event_time(df: DataFrame, col: str) -> DataFrame:
     return df
 
 
-# DataFrame-object memo: `spark.read.parquet` resolves the schema eagerly
-# (driver-side file listing + footer read, ~50-80 ms per call). A corpus
-# table's logical plan is immutable and the testdata paths never change
-# within a session, so the resolved relation is reused — every consumer
-# still gets an identical declarative plan (pushdown/pruning unaffected;
-# this caches the PLAN object, not data). Each call returns a fresh
-# ``toDF`` re-projection so every caller sees NEW attribute exprIds, as
-# two independent reads would produce — otherwise two branches of one
-# query (e.g. an SCD2 merge joining a dim and a batch both derived from
-# customer) share ids and trip Spark's ambiguous-self-join check.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+# Memo of each corpus table's last read: ``spark.read.parquet`` resolves
+# the schema eagerly (driver-side file listing + footer read, ~140 ms per
+# call at sf0.01). The corpus files are immutable, so the resolved raw
+# schema is reused, and so is the last frame while the same session asks
+# again. A frame is bound to the session that built it and plans under
+# that session's confs, so another session (a ``child_session``) gets a
+# read of its own, rebuilt from the memoed schema without the footer read
+# (~22 ms against ~10 ms for the same-session hit), which then becomes the
+# memoed frame. One entry per table, whatever the number of sessions.
+# Every caller gets a fresh ``toDF`` re-projection so it sees NEW
+# attribute exprIds, as two independent reads would produce — otherwise
+# two branches of one query (e.g. an SCD2 merge joining a dim and a batch
+# both derived from customer) share ids and trip Spark's
+# ambiguous-self-join check.
+_TABLE_CACHE: dict[tuple, tuple[T.StructType, DataFrame]] = {}
+_TABLE_LOCK = threading.Lock()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one corpus table. Lazy — nothing is read until an action."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _TABLE_CACHE.get(key)
-    if got is not None:
-        return got.toDF(*got.columns)
-    # Runtime-settable confs applied here (not only in the session factory)
-    # because the driver harness builds its own SparkSession.
-    # inferTimestampNTZ=false makes plain-micros parquet timestamps (no UTC
-    # flag) scan directly as session-TZ TIMESTAMP — a scan-level fix, so
-    # predicate pushdown on timestamp filters is preserved (a post-scan
-    # NTZ->TZ cast would block it). Session TZ is pinned UTC, so values are
-    # identical to the UTC-naive DuckDB oracle.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name in _EVENT_TIME_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in _EVENT_TIME_COLS.get(name, ()):
-        df = _normalize_event_time(df, col)
-    _TABLE_CACHE[key] = df
-    return df.toDF(*df.columns)
+    key = (sf_dir, name)
+    with _TABLE_LOCK:
+        got = _TABLE_CACHE.get(key)
+        if got is None or got[1].sparkSession is not spark:
+            # Runtime-settable confs applied here (not only in the session
+            # factory) because the driver harness builds its own
+            # SparkSession. Idempotent: every session that reads the
+            # corpus needs these values and no query needs others.
+            # inferTimestampNTZ=false makes plain-micros parquet timestamps
+            # (no UTC flag) scan directly as session-TZ TIMESTAMP — a
+            # scan-level fix, so predicate pushdown on timestamp filters is
+            # preserved (a post-scan NTZ->TZ cast would block it). Session
+            # TZ is pinned UTC, so values are identical to the UTC-naive
+            # DuckDB oracle.
+            spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+            if name in _EVENT_TIME_COLS:
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            reader = spark.read if got is None else spark.read.schema(got[0])
+            df = reader.parquet(f"{sf_dir}/{name}.parquet")
+            schema = df.schema if got is None else got[0]
+            for col in _EVENT_TIME_COLS.get(name, ()):
+                df = _normalize_event_time(df, col)
+            got = _TABLE_CACHE[key] = (schema, df)
+    return got[1].toDF(*got[1].columns)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
@@ -98,11 +109,12 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
 # file-index cache), never data or results.
 _FANOUT_MEMO: dict[tuple, int] = {}
 
-# Memo of the PERSISTED spread frames (one cache per (app, dir, table));
-# cleared by operators.storage.unpersist_all via the release hook, so its
-# lifetime is exactly the persisted frames'. Caches a plan whose persist
-# is released between bench runs — never data across timed runs.
-_SPREAD_MEMO: dict[tuple, DataFrame] = {}
+# Keys (app, dir, table) of the spread frames persisted so far; cleared
+# by operators.storage.unpersist_all via the release hook, so its
+# lifetime is exactly the persisted frames'. Filled under the lock: two
+# concurrent first loads of one table must persist ONE copy.
+_SPREAD_MEMO: set[tuple] = set()
+_SPREAD_LOCK = threading.Lock()
 _SPREAD_HOOKED = False
 
 
@@ -212,34 +224,35 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     working set is bounded by the same gate and production-scale tables
     never take this path at all.
 
-    The spread frame is MEMOIZED per (application, dir, table) and
-    released together with its persist by ``unpersist_all`` (storage
+    The spread is persisted ONCE per (application, dir, table) and
+    released together with the memo by ``unpersist_all`` (storage
     release hook): composite reports that invoke several spread-loading
     queries in one call (ann_quality_report runs the brute-force truth
     and the PQ probe beside its own corpus load) share ONE cached copy
     and ONE exchange instead of building three identical caches of the
-    same table. Callers get a fresh ``toDF`` re-projection (new
-    attribute exprIds, same ``_TABLE_CACHE`` discipline) over the same
-    cached plan, so self-joins across two loads stay unambiguous while
-    the cache lookup still hits.
+    same table. Every caller builds the same plan in its own session;
+    the cache is shared across sessions, so Spark's cache lookup
+    substitutes the persisted copy into each caller's plan. The new
+    attribute exprIds per call keep self-joins across two loads
+    unambiguous.
     """
     df = load_table(spark, sf_dir, name)
     n = scan_fanout(spark, sf_dir, name)
     if not n:
         return df
+    spread = df.repartition(n)
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _SPREAD_MEMO.get(key)
-    if got is not None:
-        return got.toDF(*got.columns)
     from ..operators.storage import on_release, persist_tracked
 
     global _SPREAD_HOOKED
-    if not _SPREAD_HOOKED:
-        on_release(_SPREAD_MEMO.clear)
-        _SPREAD_HOOKED = True
-    spread = persist_tracked(df.repartition(n))
-    _SPREAD_MEMO[key] = spread
-    return spread.toDF(*spread.columns)
+    with _SPREAD_LOCK:
+        if not _SPREAD_HOOKED:
+            on_release(_SPREAD_MEMO.clear)
+            _SPREAD_HOOKED = True
+        if key not in _SPREAD_MEMO:
+            persist_tracked(spread)
+            _SPREAD_MEMO.add(key)
+    return spread
 
 
 def table_bytes(sf_dir: str, *names: str) -> int:
@@ -264,12 +277,12 @@ def scaled_shuffle_partitions(
     target_bytes: int = 64 * 1024 * 1024,
     cap: int = 4096,
 ) -> int:
-    """Scale-adaptive count for a SCOPED shuffle-partition override
+    """Scale-adaptive shuffle-partition count for a query's child session
     (optimization guide §2.2/§2.5): ``floor`` is the measured local
     optimum at bench scale (where near-empty partitions are pure
     task-launch overhead), growing with the input so a 100x corpus
     never sorts 100x the rows into the same fixed partition count.
-    The r14 sf10 sweep caught exactly that failure: pagerank's scoped
+    The r14 sf10 sweep caught exactly that failure: pagerank's fixed
     constant 4 OOM'd the edge-build sort at 60M lineitem rows
     (SparkOutOfMemoryError in UnsafeExternalSorter under the
     localCheckpoint unroll); bytes-derived counts keep per-task sort
@@ -277,10 +290,13 @@ def scaled_shuffle_partitions(
     missing/renamed tables fall back to the floor — WITH a warning,
     because the floor is exactly the fixed-count OOM class this
     function exists to fix; at that scale the session default (sized
-    per cluster) should be used instead of a scoped override anyway.
+    per cluster) should be used instead of a per-query override anyway.
     ``cap`` bounds a pathological bytes estimate (a mispointed dir)
     so the override can never explode into tens of thousands of
-    near-empty shuffle partitions."""
+    near-empty shuffle partitions; it warns when it binds, since the
+    capped count is then NOT sized to the input."""
+    import warnings
+
     try:
         total = table_bytes(sf_dir, *names)
     except OSError as exc:
@@ -289,8 +305,6 @@ def scaled_shuffle_partitions(
     else:
         reason = "zero bytes on disk"
     if total <= 0:
-        import warnings
-
         warnings.warn(
             f"scaled_shuffle_partitions: {reason} for {names} under "
             f"{sf_dir!r} — falling back to the bench-scale floor "
@@ -300,7 +314,18 @@ def scaled_shuffle_partitions(
             stacklevel=2,
         )
         return floor
-    return min(cap, max(floor, -(-total // target_bytes)))
+    n = max(floor, -(-total // target_bytes))
+    if n > cap:
+        warnings.warn(
+            f"scaled_shuffle_partitions: {total} bytes for {names} under "
+            f"{sf_dir!r} ask for {n} partitions at {target_bytes} bytes "
+            f"each — clamped to the cap {cap}, so partitions run larger "
+            "than the target; check the table paths or raise the cap",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return cap
+    return n
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

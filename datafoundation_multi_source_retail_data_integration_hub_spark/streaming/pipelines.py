@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.concurrent import overlap
 from ..functions.parity import stable_sum, sql_stable_sum
+from ..session import child_session
 
 _SINK_COUNTER = itertools.count()
 
@@ -168,15 +170,14 @@ STREAM_SHUFFLE_PARTITIONS = 4
 _STREAM_TARGET_BYTES = 16 * 1024 * 1024
 
 
-def _stream_scoped(fn):
-    """Run a driver-facing streaming query under the streaming shuffle
-    sizing (scoped; restored on exit). Safe because each wrapped query
-    materializes fully inside (memory sink drained / localCheckpoint)."""
+def _stream_session(fn):
+    """Run a driver-facing streaming query in a child session with the
+    streaming shuffle sizing. The caller's session keeps its own count,
+    and frames the query returns plan under the child's."""
     import functools
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..session import scoped_confs
         from ..sources.tables import scaled_shuffle_partitions
 
         n = scaled_shuffle_partitions(
@@ -185,16 +186,49 @@ def _stream_scoped(fn):
             STREAM_SHUFFLE_PARTITIONS,
             target_bytes=_STREAM_TARGET_BYTES,
         )
-        with scoped_confs(
-            spark,
-            {"spark.sql.shuffle.partitions": str(n)},
-        ):
-            return fn(spark, sf_dir)
+        return fn(
+            child_session(spark, {"spark.sql.shuffle.partitions": str(n)}),
+            sf_dir,
+        )
 
     return wrapper
 
 
-@_stream_scoped
+def read_back_schema(dt: T.DataType) -> T.DataType:
+    """``dt`` as a parquet read of data written with it reports it: every
+    struct field nullable, at any depth, and ``containsNull`` /
+    ``valueContainsNull`` set on arrays and maps (map keys stay
+    non-null). A file stream over a feed directory takes this schema
+    from the feed frame with no read-back job."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, read_back_schema(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(read_back_schema(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            read_back_schema(dt.keyType), read_back_schema(dt.valueType), True
+        )
+    return dt
+
+
+def _move_staged(stage: str, src: str) -> None:
+    """Move a staged feed's part files into a stream's source directory.
+    A feed written to ``stage`` while a stream replays ``src`` stays
+    invisible to it; per-file renames publish it after (UUID part names
+    cannot collide)."""
+    import os
+
+    for fn in os.listdir(stage):
+        if not fn.startswith(("_", ".")):
+            os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+
+
+@_stream_session
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the watermarked tumbling aggregation as an actual streaming query
     (memory sink, complete mode) — result equals the batch twin, so the
@@ -202,7 +236,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(tumbling_counts(events_stream(spark, sf_dir)))
 
 
-@_stream_scoped
+@_stream_session
 def stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup then count by type (append mode)."""
     dd = dedup_within_watermark(events_stream(spark, sf_dir))
@@ -210,7 +244,7 @@ def stream_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("event_type").agg(F.count("*").alias("n_events"))
 
 
-@_stream_scoped
+@_stream_session
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming ``session_window`` per user (complete mode) —
     semantics equal the batch lag+cumsum sessionization with the same gap:
@@ -250,7 +284,7 @@ def interval_click_join(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     )
 
 
-@_stream_scoped
+@_stream_session
 def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: every purchase joined to the same
     user's clicks in the ``ATTRIBUTION_WINDOW_MIN`` minutes at-or-before
@@ -314,7 +348,7 @@ def static_dim_enrichment(stream: DataFrame, dim: DataFrame) -> DataFrame:
     return stream.join(dim, stream["user_id"] == dim["c_custkey"], "inner")
 
 
-@_stream_scoped
+@_stream_session
 def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment end-to-end: the purchase stream joined to
     the static customer dimension, then watermarked daily revenue per
@@ -359,7 +393,7 @@ GROUP BY 1, 2
 """
 
 
-@_stream_scoped
+@_stream_session
 def stream_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental staging ingestion end-to-end (§2.9): replay the
     warehouse two-batch SCD2 scenario as TWO ``availableNow`` streaming
@@ -466,7 +500,7 @@ FROM sessions GROUP BY user_id, grp
 SESSION_STATS_SPLIT = "2024-01-16 00:00:00"
 
 
-@_stream_scoped
+@_stream_session
 def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator end-to-end (§2.9 "custom
     stateful operators"): per-user lifetime session statistics via
@@ -481,7 +515,6 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..queries.eventops import SESSION_GAP_SECONDS
-    from ..session import scoped_confs
     from ..sources.tables import load_table, scaled_shuffle_partitions
     from .stateful import user_session_stats
 
@@ -498,54 +531,45 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(out_dir)
 
+    # The stateful stage gets its own partition count, in a child
+    # session of its own: unlike the store-commit-bound replays that set
+    # the family floor of 4, the per-partition work here is a Python
+    # applyInPandasWithState fold over real event volume, which
+    # parallelizes with instances up to the commit overhead. Measured at
+    # sf0.1 (interleaved min-of-3): 4.27 s at 4, 3.79 at 8, 3.13 at 16,
+    # 3.78 at 32 — floor 16, bytes-derived beyond it like every
+    # conf-specific count (r14 pagerank treatment).
+    n = scaled_shuffle_partitions(
+        sf_dir, ("events",), 16, target_bytes=_STREAM_TARGET_BYTES
+    )
+    stateful = child_session(spark, {"spark.sql.shuffle.partitions": str(n)})
+
     def start_run() -> None:
-        # Rescope the stateful stage's partition count for THIS query:
-        # unlike the store-commit-bound replays that set the family
-        # floor of 4, the per-partition work here is a Python
-        # applyInPandasWithState fold over real event volume, which
-        # parallelizes with instances up to the commit overhead.
-        # Measured at sf0.1 (interleaved min-of-3): 4.27 s at 4, 3.79
-        # at 8, 3.13 at 16, 3.78 at 32 — floor 16, bytes-derived
-        # beyond it like every scoped count (r14 pagerank treatment).
-        n = scaled_shuffle_partitions(
-            sf_dir, ("events",), 16, target_bytes=_STREAM_TARGET_BYTES
-        )
-        with scoped_confs(
-            spark, {"spark.sql.shuffle.partitions": str(n)}
-        ):
-            q = (
-                user_session_stats(
-                    spark.readStream.schema(schema).parquet(src),
-                    SESSION_GAP_SECONDS,
-                )
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
+        q = (
+            user_session_stats(
+                stateful.readStream.schema(schema).parquet(src),
+                SESSION_GAP_SECONDS,
             )
-            _drain(q, "stateful session")
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _drain(q, "stateful session")
 
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         ev.filter(F.col("ts") < split).write.mode("append").parquet(src)
         # §2.6: the second time-slice derives from the source table, not
-        # from run 1's state — stage it during run 1, rename in after
-        # (staging dir is invisible to the running stream)
+        # from run 1's state — stage it during run 1, move it in after
         stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_b2 = pool.submit(
-                lambda: ev.filter(F.col("ts") >= split)
-                .write.mode("append")
-                .parquet(stage)
-            )
-            start_run()
-            f_b2.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        overlap(
+            lambda: ev.filter(F.col("ts") >= split)
+            .write.mode("append")
+            .parquet(stage),
+            start_run,
+        )
+        _move_staged(stage, src)
         start_run()
         # every column is monotone per user (first_us constant once set),
         # so max/min folds recover each user's LAST emission
@@ -587,7 +611,7 @@ FROM lagged GROUP BY 1
 """
 
 
-@_stream_scoped
+@_stream_session
 def stream_audit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once streaming ingestion end-to-end over the audit log
     (``pipelines.audit.logged_stream_sink``): an ``availableNow`` run
@@ -692,7 +716,7 @@ FROM events GROUP BY 1, 2, 3
 """
 
 
-@_stream_scoped
+@_stream_session
 def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental view maintenance: the daily sales mart
     maintained by a ``foreachBatch`` sink that merges each micro-batch's
@@ -752,37 +776,18 @@ def stream_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(q, "mart-refresh")
 
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         base_feed = fact.filter(F.col("__ok") % IVM_DELTA_MOD != 0).drop("__ok")
         delta = fact.filter(F.col("__ok") % IVM_DELTA_MOD == 0).drop("__ok")
         base_feed.write.mode("append").parquet(src)
-        # the source schema is the feed frame's, nullable-relaxed the way
-        # a parquet read reports it — no extra read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in base_feed.schema]
-        )
+        schema = read_back_schema(base_feed.schema)
         # §2.6 overlap: the delta feed derives from the persisted fact,
-        # not from run 1's state — write it to a STAGING dir (invisible
-        # to the running stream) while run 1 replays, then move the part
-        # files in (per-file renames; UUID part names cannot collide)
+        # not from run 1's state — stage it while run 1 replays
         stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_delta = pool.submit(
-                lambda: delta.write.mode("append").parquet(stage)
-            )
-            run()
-            f_delta.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        overlap(lambda: delta.write.mode("append").parquet(stage), run)
+        _move_staged(stage, src)
         # same overlap for the replay batch's materialization: it reads
         # the persisted fact, never run 2's state
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_replay = pool.submit(lambda: delta.localCheckpoint(eager=True))
-            run()
-            replay_batch = f_replay.result()
+        replay_batch, _ = overlap(lambda: delta.localCheckpoint(eager=True), run)
         # at-least-once redelivery of the final micro-batch: same stream
         # batch id, guard skips (apply_batch returns False)
         last = len(outcomes) - 1
@@ -810,7 +815,7 @@ def _mart_ivm_oracle() -> str:
     return MART_INCREMENTAL_REFRESH_ORACLE
 
 
-@_stream_scoped
+@_stream_session
 def stream_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming changelog compaction: a ``foreachBatch`` sink folds each
     micro-batch's per-key compaction state (``operators/cdc.compact_batch``)
@@ -871,29 +876,19 @@ def stream_cdc_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(q, "cdc-compaction")
 
     try:
-        from concurrent.futures import ThreadPoolExecutor
-
         ev = load_tables(spark, sf_dir, "events")["events"]
         ev.filter(F.col("event_id") % 2 == 0).write.mode("append").parquet(src)
-        # feed frame's schema, nullable-relaxed as a parquet read reports
-        # it — no read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in ev.schema]
-        )
+        schema = read_back_schema(ev.schema)
         # §2.6: the odd-parity feed derives from the source table, not
-        # from run 1's state — stage it during run 1, rename in after
+        # from run 1's state — stage it during run 1, move it in after
         stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_odd = pool.submit(
-                lambda: ev.filter(F.col("event_id") % 2 == 1)
-                .write.mode("append")
-                .parquet(stage)
-            )
-            run()
-            f_odd.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        overlap(
+            lambda: ev.filter(F.col("event_id") % 2 == 1)
+            .write.mode("append")
+            .parquet(stage),
+            run,
+        )
+        _move_staged(stage, src)
         run()
         latest = max(
             int(d[1:]) for d in os.listdir(f"{base}/state") if d[0] == "v"
@@ -940,7 +935,7 @@ def committed_store_versions(d: str) -> int:
     )
 
 
-@_stream_scoped
+@_stream_session
 def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming substring dedup at ingest: a ``foreachBatch`` sink runs
     each micro-batch of documents through
@@ -963,10 +958,26 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import spans as SP
     from ..queries.pipelineops import SUBSTR_W
-    from ..sources.tables import load_tables
+    from ..sources.tables import load_tables, scaled_shuffle_partitions
 
     base = tempfile.mkdtemp(prefix="stream_substr_")
     src = f"{base}/incoming"
+    # the handler runs STATELESS batch jobs with real per-row work
+    # (tokenize + window-hash the micro-batch), so the state-store sizing
+    # rationale behind STREAM_SHUFFLE_PARTITIONS does not apply to it.
+    # The stream runs in a child session with the handler's own count —
+    # each micro-batch frame carries its stream's session, and the stream
+    # source/sink machinery around the handler never shuffles (floor 16
+    # measured 0.6 s faster at sf0.1). The count is input-derived like
+    # pagerank's (r14): window-hash postings are ~10x the document bytes,
+    # so a fixed 16 would concentrate a 100x corpus's explode+sort into
+    # 16 unsplittable tasks.
+    n_shuffle = scaled_shuffle_partitions(
+        sf_dir, ("documents",), 16, target_bytes=8 * 1024 * 1024
+    )
+    handler_spark = child_session(
+        spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}
+    )
 
     def spath(version: int) -> str:
         return f"{base}/store/v{version}"
@@ -1013,76 +1024,46 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "assumption of the two-batch oracle no longer holds"
                 )
         s = batch.sparkSession
-        # this handler runs STATELESS batch jobs with real per-row work
-        # (tokenize + window-hash the micro-batch), so the state-store
-        # sizing rationale behind STREAM_SHUFFLE_PARTITIONS does not
-        # apply inside it — rescope for the handler's own shuffles
-        # (floor 16 measured 0.6 s faster at sf0.1; the stream
-        # source/sink machinery around it never shuffles). The count is
-        # input-derived like pagerank's (r14): window-hash postings are
-        # ~10x the document bytes, so a fixed 16 would concentrate a
-        # 100x corpus's explode+sort into 16 unsplittable tasks.
-        from ..session import scoped_confs
-        from ..sources.tables import scaled_shuffle_partitions
+        # previous store addressed by BATCH ID, not driver-local state: a
+        # redelivered batch re-derives its outputs from the immutable
+        # v{batch_id-1}, and both writes are overwrite — idempotent
+        if batch_id > 0:
+            store_hv = s.read.parquet(spath(batch_id - 1))
+        else:
+            from ..functions.local import local_frame
 
-        n_shuffle = scaled_shuffle_partitions(
-            sf_dir, ("documents",), 16, target_bytes=8 * 1024 * 1024
-        )
-        with scoped_confs(s, {"spark.sql.shuffle.partitions": str(n_shuffle)}):
-            # previous store addressed by BATCH ID, not driver-local
-            # state: a redelivered batch re-derives its outputs from the
-            # immutable v{batch_id-1}, and both writes are overwrite —
-            # idempotent
-            if batch_id > 0:
-                store_hv = s.read.parquet(spath(batch_id - 1))
-            else:
-                from ..functions.local import local_frame
-
-                store_hv = local_frame(s, [], "hv long")
-            # ONE tokenize+hash window pass per micro-batch, persisted:
-            # the report and the store fold both consume it (re-deriving
-            # the windows from raw text per consumer measured ~2x the
-            # handler cost at sf0.1); one distinct over the union
-            # replaces the old per-side distinct — same store contents
-            pos = SP.window_hash_positions(
-                batch, "text", "doc_id", SUBSTR_W
-            ).persist()
-            try:
-                report = SP.report_against_store(
-                    batch, store_hv, "text", "doc_id", SUBSTR_W, pos=pos
-                )
-                merged = (
-                    store_hv.select("hv").union(pos.select("hv")).distinct()
-                )
-                # §2.6: the report and the store fold write DIFFERENT
-                # directories and share only the persisted pos (whose
-                # concurrent materialization is serialized per block by
-                # the BlockManager) — overlap the two write jobs. The
-                # crash window is unchanged: a torn store version still
-                # reads as fresh (no _SUCCESS) and a redelivery
-                # re-derives BOTH writes idempotently from v{id-1}.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as p:
-                    f_r = p.submit(
-                        lambda: report.write.mode("overwrite").parquet(
-                            f"{base}/reports/b{batch_id}"
-                        )
-                    )
-                    f_m = p.submit(
-                        lambda: merged.write.mode("overwrite").parquet(
-                            spath(batch_id)
-                        )
-                    )
-                    f_r.result()
-                    f_m.result()
-            finally:
-                pos.unpersist()
+            store_hv = local_frame(s, [], "hv long")
+        # ONE tokenize+hash window pass per micro-batch, persisted: the
+        # report and the store fold both consume it (re-deriving the
+        # windows from raw text per consumer measured ~2x the handler
+        # cost at sf0.1); one distinct over the union replaces the old
+        # per-side distinct — same store contents
+        pos = SP.window_hash_positions(batch, "text", "doc_id", SUBSTR_W).persist()
+        try:
+            report = SP.report_against_store(
+                batch, store_hv, "text", "doc_id", SUBSTR_W, pos=pos
+            )
+            merged = store_hv.select("hv").union(pos.select("hv")).distinct()
+            # §2.6: the report and the store fold write DIFFERENT
+            # directories and share only the persisted pos (whose
+            # concurrent materialization is serialized per block by the
+            # BlockManager) — overlap the two write jobs. The crash
+            # window is unchanged: a torn store version still reads as
+            # fresh (no _SUCCESS) and a redelivery re-derives BOTH
+            # writes idempotently from v{id-1}.
+            overlap(
+                lambda: report.write.mode("overwrite").parquet(
+                    f"{base}/reports/b{batch_id}"
+                ),
+                lambda: merged.write.mode("overwrite").parquet(spath(batch_id)),
+            )
+        finally:
+            pos.unpersist()
 
     def run() -> None:
         run_state["fresh"] = 0
         q = (
-            spark.readStream.schema(schema)
+            handler_spark.readStream.schema(schema)
             .parquet(src)
             .writeStream.foreachBatch(handler)
             .option("checkpointLocation", f"{base}/ckpt")
@@ -1098,31 +1079,20 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     try:
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(src)
-        # feed frame's schema, nullable-relaxed as a parquet read reports
-        # it — no read-back job
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in docs.schema]
-        )
+        schema = read_back_schema(docs.schema)
         # §2.6: the odd-parity feed derives from the source table, not
-        # from run 1's store state — stage it during run 1, rename in
-        # after (staging dir is invisible to the running stream)
+        # from run 1's store state — stage it during run 1, move it in
+        # after
         stage = f"{base}/stage"
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            f_odd = pool.submit(
-                lambda: docs.filter(F.col("doc_id") % 2 == 1)
-                .write.mode("append")
-                .parquet(stage)
-            )
-            run()
-            f_odd.result()
-        for fn in os.listdir(stage):
-            if not fn.startswith(("_", ".")):
-                os.rename(os.path.join(stage, fn), os.path.join(src, fn))
+        overlap(
+            lambda: docs.filter(F.col("doc_id") % 2 == 1)
+            .write.mode("append")
+            .parquet(stage),
+            run,
+        )
+        _move_staged(stage, src)
         run()
         out = spark.read.parquet(f"{base}/reports/b*").localCheckpoint(
             eager=True

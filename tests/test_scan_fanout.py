@@ -13,6 +13,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from datafoundation_multi_source_retail_data_integration_hub_spark.operators import (
     storage,
@@ -99,9 +100,10 @@ def test_scaled_shuffle_partitions_cap_bounds_pathological_estimates():
     # a 1-byte target over any real file would explode the count; the
     # cap keeps a bad estimate from minting tens of thousands of
     # near-empty shuffle partitions
-    got = scaled_shuffle_partitions(
-        SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
-    )
+    with pytest.warns(RuntimeWarning, match="clamped to the cap 64"):
+        got = scaled_shuffle_partitions(
+            SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
+        )
     assert got == 64
 
 

@@ -93,25 +93,25 @@ def test_dpp_injects_runtime_partition_filter(spark):
 
 
 def test_bloom_filter_injected_and_confs_restored(spark):
-    """Runtime bloom-filter injection: under the scoped at-scale confs
-    (broadcast off, probe-size floor lowered) the optimized plan carries
-    a might_contain semi-join predicate on the lineitem probe side; and
-    the scope restores every conf afterwards. Values are gated by the
-    parametrized oracle test."""
-    from datafoundation_multi_source_retail_data_integration_hub_spark.session import (
-        scoped_confs,
-    )
-
+    """Runtime bloom-filter injection: the query's frame belongs to a
+    child session carrying the at-scale confs (broadcast off, probe-size
+    floor lowered), so its executed plan carries a might_contain
+    semi-join predicate on the lineitem probe side; the parent session's
+    confs are never touched. Values are gated by the parametrized oracle
+    test."""
     before = {
         k: spark.conf.get(k, None) for k in warehouse.BLOOM_JOIN_CONFS
     }
-    with scoped_confs(spark, warehouse.BLOOM_JOIN_CONFS):
-        df = warehouse._bloom_fact_join(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "might_contain" in plan, plan
-        assert "bloom_filter_agg" in plan, plan
+    df = warehouse.bloom_pruned_fact_join(spark, SF_SMOKE)
+    assert df.sparkSession is not spark
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "might_contain" in plan, plan
+    assert "bloom_filter_agg" in plan, plan
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain" in executed, executed
     after = {k: spark.conf.get(k, None) for k in warehouse.BLOOM_JOIN_CONFS}
     assert after == before
-    # without the scope the toy corpus broadcasts the dim - no bloom filter
+    # in the parent session the toy corpus broadcasts the dim - no bloom filter
     plain = warehouse._bloom_fact_join(spark, SF_SMOKE)
     assert "might_contain" not in plain._jdf.queryExecution().optimizedPlan().toString()

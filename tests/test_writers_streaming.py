@@ -90,3 +90,30 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     after_df = spark.read.parquet(path)
     assert after_df.count() == 10_000
     assert sum(r["k"] for r in after_df.collect()) == before
+
+
+def test_read_back_schema_relaxes_nested_nullability(spark, tmp_path):
+    """A file stream's schema is taken from the feed frame, relaxed the
+    way a parquet read of the written feed reports it — at every depth:
+    nested struct fields, array elements and map values."""
+    from pyspark.sql import types as T
+
+    df = spark.range(3).select(
+        F.struct(
+            F.col("id").alias("a"),
+            F.struct(F.col("id").alias("b")).alias("inner"),
+        ).alias("s"),
+        F.array(F.struct(F.col("id").alias("x"))).alias("arr"),
+        F.create_map(F.lit("k"), F.array(F.col("id"))).alias("m"),
+    )
+    # non-null at every level before the write
+    assert not df.schema["s"].nullable
+    assert not df.schema["arr"].dataType.containsNull
+    assert not df.schema["m"].dataType.valueContainsNull
+    path = str(tmp_path / "feed")
+    df.write.parquet(path)
+    read = spark.read.parquet(path).schema
+    assert pipelines.read_back_schema(df.schema) == read
+    # a top-level-only relaxation misses the nested fields
+    top_only = T.StructType([T.StructField(f.name, f.dataType, True) for f in df.schema])
+    assert top_only != read
