@@ -21,6 +21,12 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory that holds the engine package. Python workers import the
+# package to unpickle the engine's UDFs, and they start in the JVM's
+# working directory, so a driver started outside the repository root
+# must hand them this path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "datafoundation_hub_spark",
@@ -39,6 +45,9 @@ def get_spark(
       parallelism; left at default — correct for both scales.
     - Arrow execution accelerates any pandas interchange (``toPandas``,
       pandas UDFs) by columnar batch transfer.
+    - ``spark.executorEnv.PYTHONPATH`` leads with the package's parent
+      directory (merged with any value in ``extra_conf``), so Python
+      workers import the engine whatever the driver's working directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -65,7 +74,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH", "")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [_PACKAGE_PARENT, *(p for p in worker_path.split(os.pathsep) if p)]
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -271,6 +271,7 @@ def table_bytes(sf_dir: str, *names: str) -> int:
 
 
 def scaled_shuffle_partitions(
+    spark: SparkSession,
     sf_dir: str,
     names: tuple[str, ...],
     floor: int,
@@ -278,25 +279,41 @@ def scaled_shuffle_partitions(
     cap: int = 4096,
 ) -> int:
     """Scale-adaptive shuffle-partition count for a query's child session
-    (optimization guide §2.2/§2.5): ``floor`` is the measured local
-    optimum at bench scale (where near-empty partitions are pure
-    task-launch overhead), growing with the input so a 100x corpus
-    never sorts 100x the rows into the same fixed partition count.
-    The r14 sf10 sweep caught exactly that failure: pagerank's fixed
-    constant 4 OOM'd the edge-build sort at 60M lineitem rows
-    (SparkOutOfMemoryError in UnsafeExternalSorter under the
-    localCheckpoint unroll); bytes-derived counts keep per-task sort
-    state bounded at any scale. Non-posix storage (object stores) and
-    missing/renamed tables fall back to the floor — WITH a warning,
-    because the floor is exactly the fixed-count OOM class this
-    function exists to fix; at that scale the session default (sized
-    per cluster) should be used instead of a per-query override anyway.
-    ``cap`` bounds a pathological bytes estimate (a mispointed dir)
-    so the override can never explode into tens of thousands of
-    near-empty shuffle partitions; it warns when it binds, since the
-    capped count is then NOT sized to the input."""
+    (optimization guide §2.2/§2.5):
+    ``max(min(floor, defaultParallelism), ceil(bytes / target_bytes))``.
+
+    The two terms answer different questions:
+
+    - ``floor`` is the measured speed optimum at bench scale, where
+      near-empty partitions are pure per-task cost. One wave rule: the
+      floor never schedules more than one wave of tasks, so it is capped
+      at ``spark``'s ``defaultParallelism``. The floors were measured on
+      32 cores, where 16 tasks are one wave; on 4 cores the same 16 ran
+      as four waves, and capping them to 4 took the streaming
+      benchmark's lap (sf0.01, ``stream_user_session_stats``'s
+      ``applyInPandasWithState`` stage) from a median 14.6 s to 10.2 s
+      and its tasks from 58 to 34. On 32 cores every count is unchanged
+      (``min(16, 32) = 16``).
+    - the bytes term is the memory-safety term and may grow past the
+      core count, so a 100x corpus never sorts 100x the rows into the
+      same partition count. The r14 sf10 sweep caught exactly that
+      failure: pagerank's fixed constant 4 OOM'd the edge-build sort at
+      60M lineitem rows (SparkOutOfMemoryError in UnsafeExternalSorter
+      under the localCheckpoint unroll); bytes-derived counts keep
+      per-task sort state bounded at any scale.
+
+    Non-posix storage (object stores) and missing/renamed tables fall
+    back to the one-wave floor — WITH a warning, because the floor is
+    exactly the fixed-count OOM class this function exists to fix; at
+    that scale the session default (sized per cluster) should be used
+    instead of a per-query override anyway. ``cap`` bounds a
+    pathological bytes estimate (a mispointed dir) so the override can
+    never explode into tens of thousands of near-empty shuffle
+    partitions; it warns when it binds, since the capped count is then
+    NOT sized to the input."""
     import warnings
 
+    floor = min(floor, spark.sparkContext.defaultParallelism)
     try:
         total = table_bytes(sf_dir, *names)
     except OSError as exc:

@@ -153,19 +153,22 @@ def dedup_within_watermark(stream: DataFrame) -> DataFrame:
 # must be sized to the stream's STATE volume, not inherited from the
 # batch shuffle default (32 here). The local replays hold ~100k events /
 # ~1.5k users of state; store commits dominate end-to-end time, measured
-# near-linear in the instance count at sf0.1 (interval join: 2.5 s at 4
-# partitions, 4.4 s at 8, 8.2 s at 32; the replay family shows the same
-# slope — audit replay 2.5 s vs 4.8 s, substring dedup 5.4 s vs 9.8 s at
-# 4 vs 8). RocksDB provider measured no better at this volume (4.8 s vs
-# 4.4 s, HDFS-backed, interval join at 8). On a production firehose this
-# constant scales up with state size; it is a conf, not a plan property —
-# checkpoints pin it per query, and every query here starts from a fresh
-# checkpoint. The 4 is the measured BENCH-SCALE floor; the applied count
-# is input-bytes-derived (``scaled_shuffle_partitions``, the r14
-# pagerank treatment): state volume tracks the events feed, so one more
-# store instance per 16 MB of events keeps per-instance state bounded at
-# any scale while the floor preserves the measured local optimum (4
-# through sf1; events at sf10 is ~205 MB -> 13 partitions).
+# near-linear in the instance count at sf0.1 on 32 cores (interval join:
+# 2.5 s at 4 partitions, 4.4 s at 8, 8.2 s at 32; the replay family
+# shows the same slope — audit replay 2.5 s vs 4.8 s, substring dedup
+# 5.4 s vs 9.8 s at 4 vs 8). RocksDB provider measured no better at this
+# volume (4.8 s vs 4.4 s, HDFS-backed, interval join at 8). On a
+# production firehose this constant scales up with state size; it is a
+# conf, not a plan property — checkpoints pin it per query, and every
+# query here starts from a fresh checkpoint. The 4 is the measured
+# BENCH-SCALE floor, and one wave rule: ``scaled_shuffle_partitions``
+# caps every floor at the core count, so a floor never schedules more
+# than one wave of tasks (4 is one wave on both the 32-core and the
+# 4-core box). The applied count is input-bytes-derived beyond the floor
+# (the r14 pagerank treatment): state volume tracks the events feed, so
+# one more store instance per 16 MB of events keeps per-instance state
+# bounded at any scale, past the core count if need be (4 through sf1;
+# events at sf10 is ~205 MB -> 13 partitions).
 STREAM_SHUFFLE_PARTITIONS = 4
 _STREAM_TARGET_BYTES = 16 * 1024 * 1024
 
@@ -181,6 +184,7 @@ def _stream_session(fn):
         from ..sources.tables import scaled_shuffle_partitions
 
         n = scaled_shuffle_partitions(
+            spark,
             sf_dir,
             ("events",),
             STREAM_SHUFFLE_PARTITIONS,
@@ -535,12 +539,17 @@ def stream_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session of its own: unlike the store-commit-bound replays that set
     # the family floor of 4, the per-partition work here is a Python
     # applyInPandasWithState fold over real event volume, which
-    # parallelizes with instances up to the commit overhead. Measured at
-    # sf0.1 (interleaved min-of-3): 4.27 s at 4, 3.79 at 8, 3.13 at 16,
-    # 3.78 at 32 — floor 16, bytes-derived beyond it like every
-    # conf-specific count (r14 pagerank treatment).
+    # parallelizes with instances up to the commit overhead — but only
+    # within one wave of tasks. Measured at sf0.1 on 32 cores
+    # (interleaved min-of-3): 4.27 s at 4, 3.79 at 8, 3.13 at 16, 3.78 at
+    # 32 — floor 16. On 4 cores the same 16 ran as four waves, each
+    # paying Python-worker start and run per task; the one-wave cap in
+    # ``scaled_shuffle_partitions`` applies 4 there, and warm calls at
+    # sf0.1 read 6.0-10.4 s (median 8.0) against 9.7-11.5 s (median
+    # 10.4) at 16, three processes each. Bytes-derived beyond the floor
+    # like every conf-specific count (r14 pagerank treatment).
     n = scaled_shuffle_partitions(
-        sf_dir, ("events",), 16, target_bytes=_STREAM_TARGET_BYTES
+        spark, sf_dir, ("events",), 16, target_bytes=_STREAM_TARGET_BYTES
     )
     stateful = child_session(spark, {"spark.sql.shuffle.partitions": str(n)})
 
@@ -967,13 +976,16 @@ def stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rationale behind STREAM_SHUFFLE_PARTITIONS does not apply to it.
     # The stream runs in a child session with the handler's own count —
     # each micro-batch frame carries its stream's session, and the stream
-    # source/sink machinery around the handler never shuffles (floor 16
-    # measured 0.6 s faster at sf0.1). The count is input-derived like
-    # pagerank's (r14): window-hash postings are ~10x the document bytes,
-    # so a fixed 16 would concentrate a 100x corpus's explode+sort into
-    # 16 unsplittable tasks.
+    # source/sink machinery around the handler never shuffles. Floor 16
+    # measured 0.6 s faster at sf0.1 on 32 cores, where it is one wave;
+    # on 4 cores it would be four waves, and the one-wave cap to 4
+    # measured 4.3-6.2 s warm at sf0.1 against 5.7-9.6 s at 16 (no
+    # difference at sf0.01: medians 3.6 s and 3.7 s). The count is
+    # input-derived like pagerank's (r14): window-hash postings are ~10x
+    # the document bytes, so a fixed 16 would concentrate a 100x corpus's
+    # explode+sort into 16 unsplittable tasks.
     n_shuffle = scaled_shuffle_partitions(
-        sf_dir, ("documents",), 16, target_bytes=8 * 1024 * 1024
+        spark, sf_dir, ("documents",), 16, target_bytes=8 * 1024 * 1024
     )
     handler_spark = child_session(
         spark, {"spark.sql.shuffle.partitions": str(n_shuffle)}

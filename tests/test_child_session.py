@@ -84,14 +84,14 @@ def test_root_confs_hold_while_conf_specific_blocks_are_open(spark, monkeypatch)
         for t in threads:
             t.join(120)
     assert not any(t.is_alive() for t in threads)
-    n = TB.scaled_shuffle_partitions(SF_SMOKE, ("lineitem", "orders"), 4)
+    n = TB.scaled_shuffle_partitions(spark, SF_SMOKE, ("lineitem", "orders"), 4)
     assert seen == {"merge": "dynamic", "pagerank": str(n)}
     assert str(n) != root[1]
     assert during == root
 
 
 def test_shuffle_count_takes_effect_in_the_childs_executed_plan(spark):
-    n = TB.scaled_shuffle_partitions(SF_SMOKE, ("lineitem", "orders"), 4)
+    n = TB.scaled_shuffle_partitions(spark, SF_SMOKE, ("lineitem", "orders"), 4)
     assert str(n) != spark.conf.get(SHUFFLE)
     df = relational_ext.purchase_graph_pagerank(spark, SF_SMOKE)
     df.collect()

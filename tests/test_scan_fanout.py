@@ -10,6 +10,8 @@ old constant 4)."""
 from __future__ import annotations
 
 import os
+import warnings
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -68,27 +70,26 @@ def test_load_table_spread_same_rows_wider_layout(spark):
         storage.unpersist_all()
 
 
-def test_scaled_shuffle_partitions_floor_and_growth():
+def test_scaled_shuffle_partitions_floor_and_growth(spark):
     docs = os.path.join(SF_SMOKE, "documents.parquet")
     size = os.path.getsize(docs)
     assert table_bytes(SF_SMOKE, "documents") == size
     # huge target -> the measured local floor wins
-    assert scaled_shuffle_partitions(SF_SMOKE, ("documents",), 4) == 4
+    assert scaled_shuffle_partitions(spark, SF_SMOKE, ("documents",), 4) == 4
     # tiny target -> grows with input bytes (ceil division)
     grown = scaled_shuffle_partitions(
-        SF_SMOKE, ("documents",), 4, target_bytes=1024
+        spark, SF_SMOKE, ("documents",), 4, target_bytes=1024
     )
     assert grown == max(4, -(-size // 1024))
     assert grown > 4
 
 
-def test_scaled_shuffle_partitions_warns_on_missing_table():
-    import warnings
-
+def test_scaled_shuffle_partitions_warns_on_missing_table(spark):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got = scaled_shuffle_partitions(SF_SMOKE, ("no_such_table",), 7)
-    assert got == 7
+        got = scaled_shuffle_partitions(spark, SF_SMOKE, ("no_such_table",), 7)
+    # the fallback is the floor, capped at one wave of tasks
+    assert got == min(7, spark.sparkContext.defaultParallelism)
     assert any(
         issubclass(x.category, RuntimeWarning)
         and "falling back to the bench-scale floor" in str(x.message)
@@ -96,15 +97,46 @@ def test_scaled_shuffle_partitions_warns_on_missing_table():
     )
 
 
-def test_scaled_shuffle_partitions_cap_bounds_pathological_estimates():
+def test_scaled_shuffle_partitions_cap_bounds_pathological_estimates(spark):
     # a 1-byte target over any real file would explode the count; the
     # cap keeps a bad estimate from minting tens of thousands of
     # near-empty shuffle partitions
     with pytest.warns(RuntimeWarning, match="clamped to the cap 64"):
         got = scaled_shuffle_partitions(
-            SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
+            spark, SF_SMOKE, ("documents",), 4, target_bytes=1, cap=64
         )
     assert got == 64
+
+
+def _box(cores: int) -> SimpleNamespace:
+    """A stand-in session whose only trait is its core count."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
+
+
+def test_scaled_shuffle_partitions_floor_is_one_wave(spark):
+    """The floor never schedules more than one wave of tasks; the bytes
+    term may; the cap and its warning are unchanged."""
+    size = table_bytes(SF_SMOKE, "documents")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # a binding floor is not a clamp
+        # floor 16 is one wave on 32 cores, four on 4: capped to 4
+        assert scaled_shuffle_partitions(_box(4), SF_SMOKE, ("documents",), 16) == 4
+        assert scaled_shuffle_partitions(_box(32), SF_SMOKE, ("documents",), 16) == 16
+        cores = spark.sparkContext.defaultParallelism
+        assert scaled_shuffle_partitions(spark, SF_SMOKE, ("documents",), 10**6) == cores
+        # the bytes term is the memory-safety term: past the core count
+        grown = scaled_shuffle_partitions(
+            _box(4), SF_SMOKE, ("documents",), 16, target_bytes=1024
+        )
+    assert grown == -(-size // 1024) > 16
+    with pytest.warns(RuntimeWarning, match="clamped to the cap 64"):
+        got = scaled_shuffle_partitions(
+            _box(4), SF_SMOKE, ("documents",), 16, target_bytes=1, cap=64
+        )
+    assert got == 64
+    with pytest.warns(RuntimeWarning, match="bench-scale floor 4,"):
+        got = scaled_shuffle_partitions(_box(4), SF_SMOKE, ("no_such_table",), 16)
+    assert got == 4
 
 
 def test_spread_memo_shares_one_persisted_frame(spark):

@@ -137,6 +137,70 @@ def test_session_stats_state_crosses_checkpointed_runs(spark):
         assert out[u]["last_us"] >= split_us
 
 
+def test_session_stats_stateful_stage_runs_one_wave(spark, monkeypatch):
+    """The applyInPandasWithState stage of stream_user_session_stats
+    runs at most one wave of tasks: the stateful operator's
+    numShufflePartitions, read from the stream's progress events, is at
+    most defaultParallelism on this corpus, and the result still matches
+    its oracle. The stage streams in a child session, and listeners are
+    per session, so the listener is attached to each child the pipeline
+    creates."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    import __spark_entry__ as entry
+    from datafoundation_multi_source_retail_data_integration_hub_spark.streaming import (
+        pipelines,
+    )
+
+    from .oracle import compare
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.partitions = []
+            self.terminated = 0
+            self.done = threading.Condition()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            with self.done:
+                self.partitions += [
+                    op.numShufflePartitions for op in event.progress.stateOperators
+                ]
+
+        def onQueryTerminated(self, event):
+            with self.done:
+                self.terminated += 1
+                self.done.notify_all()
+
+    rec = Recorder()
+    children = []
+    child_session = pipelines.child_session
+
+    def spy(parent, confs):
+        child = child_session(parent, confs)
+        child.streams.addListener(rec)
+        children.append(child)
+        return child
+
+    monkeypatch.setattr(pipelines, "child_session", spy)
+    name = "stream_user_session_stats"
+    try:
+        compare(spark, SF_SMOKE, entry.queries()[name], entry.oracle_sql()[name], name)
+        # progress events reach listeners asynchronously; both
+        # availableNow runs have reported once both have terminated
+        with rec.done:
+            assert rec.done.wait_for(lambda: rec.terminated >= 2, timeout=60)
+    finally:
+        for child in children:
+            child.streams.removeListener(rec)
+    assert rec.partitions
+    assert max(rec.partitions) <= spark.sparkContext.defaultParallelism
+
+
 # ---------------------------------------------------------------------------
 # Property: the cross-batch session fold equals the batch computation for
 # ANY time-ordered batch split (the streaming determinism contract), on

@@ -12,7 +12,9 @@ OVERLAP are already concurrent. The table makes three costs visible:
 - the per-job scheduling floor (many tiny jobs -> chain the floor).
 
 Run:  python tools/job_timeline.py --query scd2_partition_merge [--sf DIR]
-Prints one markdown table per query (relative times, seconds).
+Prints one markdown table per query (relative times, seconds). A UI
+endpoint error is warned about and retried; a job with no completion
+time is reported as unfinished and left out of the job span.
 """
 
 from __future__ import annotations
@@ -46,16 +48,66 @@ def _parse_ts(s: str) -> float:
 
 
 def settled_jobs(sc) -> list[dict]:
-    prev = None
+    """The application's job list once two reads in a row agree. A read
+    that fails (URLError, a timeout, a reset connection: all OSError)
+    counts as still moving: it is warned about and retried."""
+    prev = cur = None
     for _ in range(40):
-        cur = _jobs(sc)
+        try:
+            cur = _jobs(sc)
+        except OSError as exc:
+            print(f"# WARN: job list read failed ({exc}); retrying", file=sys.stderr)
+            prev = None
+            time.sleep(0.25)
+            continue
         key = sorted((j["jobId"], j.get("status"), j.get("numCompletedTasks", 0)) for j in cur)
         if key == prev:
             return cur
         prev = key
         time.sleep(0.25)
+    if cur is None:
+        raise RuntimeError("job list unreadable after 40 tries")
     print("# WARN: job list still moving", file=sys.stderr)
     return cur
+
+
+def timeline(name: str, wall: float, jobs: list[dict]) -> str:
+    """One query's markdown job table. Times are seconds from the first
+    job's submission; a job with no ``completionTime`` is unfinished."""
+    if not jobs:
+        return f"## {name}: wall {wall:.2f}s, no jobs registered"
+    jobs = sorted(jobs, key=lambda j: j["jobId"])
+    t_base = min(_parse_ts(j["submissionTime"]) for j in jobs)
+    rows = []
+    for j in jobs:
+        sub = _parse_ts(j["submissionTime"]) - t_base
+        end = _parse_ts(j["completionTime"]) - t_base if j.get("completionTime") else None
+        rows.append((j["jobId"], sub, end, j.get("numTasks", 0),
+                     (j.get("description") or j.get("name") or "")[:90]))
+    ends = [r[2] for r in rows if r[2] is not None]
+    unfinished = len(rows) - len(ends)
+    span = f"{max(ends):.2f}s" if ends else "none finished"
+    lines = [
+        f"\n## {name}: wall {wall:.2f}s, {len(rows)} jobs"
+        + (f" ({unfinished} unfinished)" if unfinished else "")
+        + f", job-span {span}",
+        "| job | start | end | dur | gap | tasks | description |",
+        "|---|---|---|---|---|---|---|",
+    ]
+    # driver-side gap before each job = its submission minus the latest
+    # completion among EARLIER jobs (0 for overlapped jobs)
+    prev_end = 0.0
+    for jid, sub, end, ntasks, desc in rows:
+        gap = max(0.0, sub - prev_end)
+        if end is None:
+            lines.append(f"| {jid} | {sub:.2f} | unfinished | - | {gap:.2f} | {ntasks} | {desc} |")
+            continue
+        lines.append(
+            f"| {jid} | {sub:.2f} | {end:.2f} | {end - sub:.2f} | "
+            f"{gap:.2f} | {ntasks} | {desc} |"
+        )
+        prev_end = max(prev_end, end)
+    return "\n".join(lines)
 
 
 def main() -> None:
@@ -95,35 +147,7 @@ def main() -> None:
             wall = time.perf_counter() - t0
             jobs = [j for j in settled_jobs(sc) if j["jobId"] not in ids0]
             unpersist_all()
-            jobs.sort(key=lambda j: j["jobId"])
-            if not jobs:
-                print(f"## {name}: wall {wall:.2f}s, no jobs registered")
-                continue
-            t_base = min(_parse_ts(j["submissionTime"]) for j in jobs)
-            rows = []
-            for j in jobs:
-                sub = _parse_ts(j["submissionTime"]) - t_base
-                end = (
-                    _parse_ts(j["completionTime"]) - t_base
-                    if j.get("completionTime")
-                    else float("nan")
-                )
-                rows.append((j["jobId"], sub, end, j.get("numTasks", 0),
-                             (j.get("description") or j.get("name") or "")[:90]))
-            # driver-side gap before each job = its submission minus the
-            # latest completion among EARLIER jobs (0 for overlapped jobs)
-            print(f"\n## {name}: wall {wall:.2f}s, {len(rows)} jobs, "
-                  f"job-span {max(r[2] for r in rows):.2f}s")
-            print("| job | start | end | dur | gap | tasks | description |")
-            print("|---|---|---|---|---|---|---|")
-            prev_end = 0.0
-            for jid, sub, end, ntasks, desc in rows:
-                gap = max(0.0, sub - prev_end)
-                print(
-                    f"| {jid} | {sub:.2f} | {end:.2f} | {end - sub:.2f} | "
-                    f"{gap:.2f} | {ntasks} | {desc} |"
-                )
-                prev_end = max(prev_end, end)
+            print(timeline(name, wall, jobs))
 
 
 if __name__ == "__main__":
