@@ -232,10 +232,11 @@ def main() -> None:
         "salted_hot_key_join",
         "scd2_customer_two_batch",
         "stream_tumbling_counts",
-        # first pandas-UDF invocation spawns the 32 Python workers
-        # (~2-3 s, worker.reuse keeps them warm) — pay it here so the
-        # timed pass measures the Arrow pipeline, not process spawn
-        "doc_unicode_clean",
+        # the first Python-worker query (here mapInPandas) starts the
+        # Python workers (~2-3 s, worker.reuse keeps them warm) — pay it
+        # here so the timed pass measures the Arrow pipeline, not
+        # process spawn
+        "doc_media_resized",
         "doc_substring_dedup_trim",
     ):
         if wname in qs:

@@ -16,9 +16,9 @@ level dedup, each with an exact DuckDB oracle twin:
   partition size — run before setting maxPartitionBytes at 100 TB;
 - unicode normalization cleaning (``doc_unicode_clean``): NFC +
   control-char strip + whitespace collapse — the canonicalization stage
-  every multilingual corpus runs before hashing/dedup. NFC itself is an
-  Arrow-batched pandas UDF (no JVM builtin); everything around it stays
-  codegen'd;
+  every multilingual corpus runs before hashing/dedup. NFC is ICU4J's
+  composer, called on the executor JVM through ``reflect``; the regex
+  strip/collapse around it stays codegen'd, and no Python worker runs;
 - quality-classifier inference (``doc_classifier_quality_score``): a
   hashed-bigram linear model evaluated as a pure-expression map — the
   fasttext-style keep/drop scorer shape. Weights are a deterministic
@@ -39,11 +39,8 @@ they extend the training-data surface mandated by the build brief.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from ..functions import text as TX
 from ..operators import spans as SP
@@ -81,24 +78,33 @@ DOC_SUBSTRING_DUP_SPANS_ORACLE = SP.sql_substring_dup_report(SUBSTR_W)
 
 # Combining-mark probe: the corpus is ASCII, where NFC is the identity —
 # the suffix (two decomposed accents, U+0301) makes the normalization
-# path *observable*, so the oracle hash actually pins Python-unicodedata
-# NFC == DuckDB (utf8proc) NFC on composed output. The probe feeds ONLY
-# the ``nfc_delta`` gate column: ``clean_text`` is the real artifact,
+# path *observable*, so the oracle hash actually pins ICU4J NFC ==
+# DuckDB (utf8proc) NFC on composed output. The probe feeds ONLY the
+# ``nfc_delta`` gate column: ``clean_text`` is the real artifact,
 # cleaned from the document's own text, consumable downstream (the r07
 # form appended the probe to the emitted text itself).
 _NFC_PROBE = " cafe\u0301 deja\u0301"  # decomposed: e + COMBINING ACUTE
 _CTRL_CLASS = r"[\x00-\x1F\x7F]"
 
 
-@pandas_udf(StringType())  # DataType instance: no session-time DDL parse
-def _nfc_normalize(s: pd.Series) -> pd.Series:
-    """Arrow-batched NFC: one Python call per ~64k-row batch, string data
-    moved via Arrow — the sanctioned slow path for the one transform
-    (canonical composition) Spark has no builtin for."""
-    import unicodedata
-
-    return s.map(
-        lambda x: x if x is None else unicodedata.normalize("NFC", x)
+def nfc(col: Column) -> Column:
+    """Canonical composition (NFC) on the executor JVM: ICU4J's
+    ``Normalizer.compose(str, false)``, which ships on Spark's classpath
+    for collations, called through the ``reflect`` builtin. Spark has no
+    NFC builtin, and ``java.text.Normalizer`` needs an enum argument
+    ``reflect`` cannot pass. ``compose`` is deprecated since ICU 56 but
+    present; ``reflect`` resolves it when the plan is analysed, so a
+    removal fails loudly. ICU throws on a NULL argument, hence the guard:
+    NULL in, NULL out."""
+    return F.when(
+        col.isNotNull(),
+        F.call_function(
+            "reflect",
+            F.lit("com.ibm.icu.text.Normalizer"),
+            F.lit("compose"),
+            col,
+            F.lit(False),
+        ),
     )
 
 
@@ -107,17 +113,18 @@ def doc_unicode_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select(
         "doc_id",
         F.length("text").alias("n_raw_chars"),
-        _nfc_normalize(F.col("text")).alias("__nfc"),
+        nfc(F.col("text")).alias("__nfc"),
         # gate-only probe, evaluated on the CONSTANT probe text: NFC
         # factorizes across the probe's leading-starter boundary (a
         # space composes/reorders with nothing before it), so
         # delta(text || probe) == delta(text) + delta(probe). The r09
         # form re-normalized the ENTIRE corpus text a second time just
-        # to learn this per-row sum; the probe still rides the executor
-        # UDF, so a broken NFC path still reddens the oracle gate.
+        # to learn this per-row sum; the probe still runs through the
+        # same executor-side ICU call (``reflect`` is nondeterministic,
+        # so it is not folded away at planning), so a broken NFC path
+        # still reddens the oracle gate.
         (
-            F.lit(len(_NFC_PROBE))
-            - F.length(_nfc_normalize(F.lit(_NFC_PROBE)))
+            F.lit(len(_NFC_PROBE)) - F.length(nfc(F.lit(_NFC_PROBE)))
         ).alias("__probe_delta"),
     )
     clean = F.trim(

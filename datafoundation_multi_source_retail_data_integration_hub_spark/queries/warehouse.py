@@ -8,6 +8,8 @@ semantics (``etl/load_to_query.py``).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,10 +52,14 @@ PART_CFG = SCD2Config(
 # deterministic. Keyed by (application id, sf_dir, table, date) so a new
 # SparkSession never sees another session's checkpointed blocks. On a real
 # cluster this role is played by the managed dim tables themselves
-# (write_table once, spark.table thereafter).
+# (write_table once, spark.table thereafter). Filled under a per-key lock:
+# concurrent first callers build ONE checkpoint, and builds of different
+# dims do not wait on each other.
 # ---------------------------------------------------------------------------
 
 _DIM_CACHE: dict[tuple, DataFrame] = {}
+_DIM_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+_DIM_LOCK = threading.Lock()  # guards _DIM_KEY_LOCKS
 
 
 def clear_dim_cache() -> None:
@@ -65,11 +71,14 @@ def _initial_dim(
     spark: SparkSession, sf_dir: str, table: str, cfg: SCD2Config, date: str
 ) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, table, cfg.natural_key, date)
-    got = _DIM_CACHE.get(key)
-    if got is None:
-        src = load_tables(spark, sf_dir, table)[table]
-        got = scd2_initial_load(src, cfg, date).localCheckpoint(eager=True)
-        _DIM_CACHE[key] = got
+    with _DIM_LOCK:
+        key_lock = _DIM_KEY_LOCKS.setdefault(key, threading.Lock())
+    with key_lock:
+        got = _DIM_CACHE.get(key)
+        if got is None:
+            src = load_tables(spark, sf_dir, table)[table]
+            got = scd2_initial_load(src, cfg, date).localCheckpoint(eager=True)
+            _DIM_CACHE[key] = got
     return got
 
 

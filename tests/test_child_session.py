@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 import sys
 import threading
+import time
 
 import __spark_entry__ as entry
 from datafoundation_multi_source_retail_data_integration_hub_spark.functions.concurrent import (
@@ -150,3 +151,30 @@ def test_spread_memo_persists_once_and_serves_every_session(spark):
     finally:
         sys.setswitchinterval(switch)
         storage.unpersist_all()
+
+
+def test_dim_memo_builds_once_under_concurrent_first_callers(spark, monkeypatch):
+    """Concurrent first callers of one initial-load dim share ONE build
+    and get the same checkpointed frame."""
+    built = []
+    real = warehouse.scd2_initial_load
+
+    def counting(*args):
+        built.append(1)
+        time.sleep(0.5)  # hold the build open while the others arrive
+        return real(*args)
+
+    monkeypatch.setattr(warehouse, "scd2_initial_load", counting)
+    warehouse.clear_dim_cache()
+    gate = threading.Barrier(8, timeout=60)
+
+    def call():
+        gate.wait()
+        return warehouse.dim_customer_scd2_init(spark, SF_SMOKE)
+
+    try:
+        frames = overlap(*[call] * 8)
+        assert len(built) == 1
+        assert all(f is frames[0] for f in frames)
+    finally:
+        warehouse.clear_dim_cache()

@@ -424,3 +424,83 @@ def test_unicode_clean_matches_oracle_on_unicode_corpus(spark):
         )
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _nfc_sweep() -> list[str]:
+    """Every code point with a decomposition or a nonzero combining
+    class, taken as itself, as its NFD and between ``a`` and U+0301,
+    plus all 11,172 Hangul syllables in NFD (algorithmic, so absent from
+    the decomposition table): 31,281 strings."""
+    import unicodedata
+
+    out = []
+    for cp in range(0x110000):
+        if 0xD800 <= cp <= 0xDFFF:  # lone surrogates are not valid text
+            continue
+        c = chr(cp)
+        if unicodedata.decomposition(c) or unicodedata.combining(c):
+            out += [c, unicodedata.normalize("NFD", c), "a" + c + "\u0301"]
+    out += [
+        unicodedata.normalize("NFD", chr(cp)) for cp in range(0xAC00, 0xD7A4)
+    ]
+    return out
+
+
+def test_nfc_parity_icu_vs_unicodedata(spark):
+    """doc_unicode_clean's NFC runs ICU4J on the executor JVM; pin it to
+    Python unicodedata NFC over the full decomposition/combining-class
+    sweep, through a Spark frame and the query's own expression."""
+    import unicodedata
+
+    from datafoundation_multi_source_retail_data_integration_hub_spark.functions.local import (
+        local_frame,
+    )
+
+    sweep = _nfc_sweep()
+    assert len(sweep) == 31281
+    got = dict(
+        local_frame(spark, list(enumerate(sweep)), "i int, s string")
+        .select("i", pipelineops.nfc(F.col("s")).alias("n"))
+        .collect()
+    )
+    bad = [
+        s for i, s in enumerate(sweep)
+        if got[i] != unicodedata.normalize("NFC", s)
+    ]
+    assert not bad, [ascii(s) for s in bad[:20]]
+
+
+def test_unicode_clean_null_text_matches_oracle(spark, tmp_path):
+    """A NULL document text cleans to NULL (clean_text, n_clean_chars,
+    nfc_delta) on both engines. ICU's composer throws on a NULL
+    argument, so this fails if the null guard around it is dropped."""
+    import pandas as pd
+
+    pd.DataFrame(
+        {"doc_id": [0, 1, 2], "text": ["cafe\u0301", None, "a  b"]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    compare(
+        spark, str(tmp_path),
+        pipelineops.QUERIES["doc_unicode_clean"],
+        pipelineops.ORACLES["doc_unicode_clean"],
+        "doc_unicode_clean[null-text]",
+    )
+    out = {
+        r["doc_id"]: r
+        for r in pipelineops.doc_unicode_clean(spark, str(tmp_path)).collect()
+    }
+    assert out[1]["clean_text"] is None
+    assert out[1]["n_clean_chars"] is None
+    assert out[1]["nfc_delta"] is None
+    assert out[0]["clean_text"] == "caf\u00e9"  # composed
+    assert out[0]["nfc_delta"] == 3  # 1 (own text) + 2 (probe)
+
+
+def test_unicode_clean_runs_no_python_stage(spark):
+    """NFC runs on the JVM: the executed plan has no Python evaluation
+    node, so the query never starts a Python worker."""
+    df = pipelineops.doc_unicode_clean(spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "reflect" in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan

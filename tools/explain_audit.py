@@ -227,10 +227,10 @@ AUDITED = {
         "forbid_pattern": r"\bExchange\b|HashAggregate|BatchEvalPython",
     },
     "doc_unicode_clean": {
-        # exactly ONE Arrow-batched Python stage (the NFC hop); the
-        # regex strip/collapse must stay in codegen around it
-        "expect": ["ArrowEvalPython", "codegen id"],
-        "forbid_pattern": r"BatchEvalPython|\bExchange\b",
+        # NFC is ICU4J on the executor JVM through reflect: no Python
+        # stage at all; the regex strip/collapse stays in codegen
+        "expect": ["reflect", "codegen id"],
+        "forbid_pattern": r"BatchEvalPython|ArrowEvalPython|\bExchange\b",
     },
     "orders_join_cardinality": {
         # both branches: map-side partial counts (HashAggregate pairs);
