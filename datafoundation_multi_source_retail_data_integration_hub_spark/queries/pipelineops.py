@@ -98,8 +98,7 @@ def nfc(col: Column) -> Column:
     NULL in, NULL out."""
     return F.when(
         col.isNotNull(),
-        F.call_function(
-            "reflect",
+        F.reflect(
             F.lit("com.ibm.icu.text.Normalizer"),
             F.lit("compose"),
             col,

@@ -52,14 +52,12 @@ PART_CFG = SCD2Config(
 # deterministic. Keyed by (application id, sf_dir, table, date) so a new
 # SparkSession never sees another session's checkpointed blocks. On a real
 # cluster this role is played by the managed dim tables themselves
-# (write_table once, spark.table thereafter). Filled under a per-key lock:
-# concurrent first callers build ONE checkpoint, and builds of different
-# dims do not wait on each other.
+# (write_table once, spark.table thereafter). Filled under one lock, so
+# concurrent first callers build ONE checkpoint.
 # ---------------------------------------------------------------------------
 
 _DIM_CACHE: dict[tuple, DataFrame] = {}
-_DIM_KEY_LOCKS: dict[tuple, threading.Lock] = {}
-_DIM_LOCK = threading.Lock()  # guards _DIM_KEY_LOCKS
+_DIM_LOCK = threading.Lock()
 
 
 def clear_dim_cache() -> None:
@@ -72,8 +70,6 @@ def _initial_dim(
 ) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, table, cfg.natural_key, date)
     with _DIM_LOCK:
-        key_lock = _DIM_KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:
         got = _DIM_CACHE.get(key)
         if got is None:
             src = load_tables(spark, sf_dir, table)[table]
